@@ -24,11 +24,19 @@ from .sources.tables import TABLE_NAMES, load_tables
 # protobuf is properly installed or no vendored copy exists; the TWS
 # query registration re-verifies against the live JVM's env either way
 # (streaming/tws.py).
+#
+# Python workers skip the probe: they inherit the shim's PYTHONPATH and env
+# from the JVM, and its `import google.protobuf` would add a namespace
+# entry inside the spark-core jar to `google.__path__`, which every later
+# task's `importlib.invalidate_caches()` then re-reads.
+from pyspark import TaskContext as _TaskContext
+
 from .session import bootstrap_vendored_protobuf as _pb_boot
 
-try:  # pragma: no cover - best-effort environment shim
-    _pb_boot()
-except Exception:
-    pass
+if _TaskContext.get() is None:
+    try:  # pragma: no cover - best-effort environment shim
+        _pb_boot()
+    except Exception:
+        pass
 
 __all__ = ["get_session", "load_tables", "TABLE_NAMES"]

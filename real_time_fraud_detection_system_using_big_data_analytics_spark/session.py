@@ -10,6 +10,33 @@ At 100 TB scale the same settings hold: AQE coalesces/re-splits shuffle
 partitions at runtime, the skew-join rewrite handles hot keys, and the
 broadcast threshold lets dimension tables (region/nation/customer at TPC-H
 proportions) broadcast instead of shuffling the fact table.
+
+Streaming commit path. Every micro-batch pays a fixed commit protocol
+(source log, offset WAL, sink metadata log, commit log) plus, for stateful
+queries, a state-store upload. Two stock confs put all of it on the cheap
+path, for every query the session starts:
+
+- ``spark.sql.streaming.checkpointFileManagerClass`` =
+  ``FileSystemBasedCheckpointFileManager``. Spark's default is the
+  FileContext manager, whose atomic write does extra mkdir, permission and
+  status calls around each rename. Without ``libhadoop`` each permission
+  call forks a ``chmod``: one atomic checkpoint write costs ~35 ms and ~20
+  new processes there, against ~8 ms and ~4 through the FileSystem manager
+  (median, 4 vCPU, Hadoop 3.4.2). It covers the offset, commit, source and
+  sink logs and the RocksDB uploads.
+- ``spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled``.
+  A RocksDB state store uploads a small changelog per partition each batch
+  instead of flushing, checkpointing and uploading a full snapshot, and
+  snapshots in the background. The cost is resident memory: unflushed
+  memtables raise the state store's ``memoryUsedBytes`` from ~94 KB to
+  ~4.2 MB on the benchmark's catch-up.
+
+Atomicity trade-off: the FileSystem manager writes a temp file, checks
+that the target does not exist, then renames. Two writers racing on the
+same batch id can both pass the check, which FileContext's atomic
+no-overwrite rename would refuse. A streaming query has one writer per
+checkpoint, and every engine session is ``local[n]``, so checkpoints sit
+on a local POSIX disk where ``rename`` itself is atomic.
 """
 
 from __future__ import annotations
@@ -95,6 +122,17 @@ def bootstrap_vendored_protobuf() -> bool:
     return False
 
 
+# The fork-free streaming commit path (module docstring). Both are runtime
+# SQL confs, read when a query starts, so tune_existing applies them too.
+STREAMING_COMMIT_CONFS = {
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+}
+
+
 def get_session(app_name: str = "fraud-engine", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) a local SparkSession with scale-sane defaults."""
     n = cpus or default_parallelism()
@@ -115,6 +153,8 @@ def get_session(app_name: str = "fraud-engine", cpus: int | None = None) -> Spar
         # that implements it while this is false (sources/pysource.py)
         .config("spark.sql.python.filterPushdown.enabled", "true")
     )
+    for key, value in STREAMING_COMMIT_CONFS.items():
+        builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
@@ -133,4 +173,6 @@ def tune_existing(spark: SparkSession) -> SparkSession:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     except Exception:
         pass
+    for key, value in STREAMING_COMMIT_CONFS.items():
+        spark.conf.set(key, value)
     return spark

@@ -55,11 +55,23 @@ class StatsListener(StreamingQueryListener):
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = json.loads(event.progress.json)
         n = int(p.get("numInputRows") or 0)
-        dur = float((p.get("durationMs") or {}).get("triggerExecution") or 0.0)
+        components = p.get("durationMs") or {}
+        dur = float(components.get("triggerExecution") or 0.0)
         self.stats.total_batches += 1
         self.stats.total_records += n
         self.stats.total_processing_ms += dur
-        self.stats.batches.append({"numInputRows": n, "triggerExecutionMs": dur})
+        # the whole trigger breakdown (latestOffset, getBatch, queryPlanning,
+        # addBatch, walCommit, commitOffsets, ...) and every stateful
+        # operator's metrics, RocksDB customMetrics included
+        self.stats.batches.append(
+            {
+                "batchId": p.get("batchId"),
+                "numInputRows": n,
+                "triggerExecutionMs": dur,
+                "durationMs": components,
+                "stateOperators": p.get("stateOperators") or [],
+            }
+        )
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
         pass

@@ -44,6 +44,13 @@ def test_stats_listener_collects_batch_progress(spark):
         assert s.total_records == 1000  # sf0.001 events row count
         d = s.as_dict()
         assert d["avg_batch_size"] > 0
+        # the whole trigger breakdown is kept, not just triggerExecution
+        for b in s.batches:
+            assert {"walCommit", "commitOffsets", "triggerExecution"} <= set(b["durationMs"])
+            assert b["durationMs"]["triggerExecution"] == b["triggerExecutionMs"]
+        # the aggregation's state operator, with its custom metrics
+        ops = [op for b in s.batches for op in b["stateOperators"]]
+        assert ops and all("numRowsTotal" in op and "customMetrics" in op for op in ops)
     finally:
         spark.streams.removeListener(listener)
 

@@ -256,6 +256,85 @@ def test_checkpoint_resume_processes_only_new_files(spark, tmp_path):
     assert drain() == list(range(0, 150))
 
 
+def test_alert_stream_file_sink_restart_exactly_once(spark, tmp_path):
+    """The alert path (JSON lines -> parse -> as_transactions -> fitted
+    FraudPipeline -> fraud_prediction == 1 -> parquet file sink) under the
+    session's checkpoint file manager: a first run drains two files, one
+    micro-batch each, and stops; a restart from the same checkpoint drains
+    two more. The union of committed alerts must equal the batch score of
+    the same files, with no duplicates, and every checkpoint log must hold
+    one entry per micro-batch with no temp file left behind."""
+    import os
+
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.ml.fraud_pipeline import (
+        FraudPipeline,
+    )
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.ml.scoring import (
+        as_transactions,
+        events_as_transactions,
+    )
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.session import (
+        STREAMING_COMMIT_CONFS,
+    )
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.sources.tables import (
+        load_tables,
+    )
+
+    for key, value in STREAMING_COMMIT_CONFS.items():
+        assert spark.conf.get(key) == value
+
+    landing, sink, ckpt = (str(tmp_path / d) for d in ("landing", "alerts", "ckpt"))
+    os.makedirs(landing)
+    ev = load_tables(spark, SF, names=("events",))["events"]
+    lines = ev.orderBy("event_id").toJSON().collect()
+    n_files = 4
+    model = FraudPipeline().fit(events_as_transactions(spark, SF))
+
+    def land(k: int) -> None:
+        with open(os.path.join(landing, f"events-{k}.json"), "w") as fh:
+            fh.write("".join(line + "\n" for line in lines[k::n_files]))
+
+    def alerts(events):
+        scored = FraudPipeline.score(model, as_transactions(events, with_key=True))
+        return scored.where(F.col("fraud_prediction") == 1).select("txn_id")
+
+    def run() -> None:
+        raw = spark.readStream.format("text").option("maxFilesPerTrigger", 1).load(landing)
+        q = (
+            alerts(parse_json_stream(raw, EVENTS_SCHEMA))
+            .writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    land(0)
+    land(1)
+    run()
+    land(2)
+    land(3)
+    run()  # restart: files 0 and 1 must not be re-read
+
+    expected = {
+        r["txn_id"]
+        for r in alerts(parse_json_stream(spark.read.text(landing), EVENTS_SCHEMA)).collect()
+    }
+    got = [r["txn_id"] for r in spark.read.parquet(sink).collect()]
+    assert expected, "the model flags nothing: the test would prove nothing"
+    assert len(got) == len(set(got)), "an alert was committed twice"
+    assert set(got) == expected
+
+    batches = {str(b) for b in range(n_files)}
+    for log in ("offsets", "commits", os.path.join("sources", "0")):
+        names = set(os.listdir(os.path.join(ckpt, log)))
+        assert {n for n in names if not n.startswith(".")} == batches, log
+        assert not [n for n in names if n.endswith(".tmp")], log
+    sink_log = set(os.listdir(os.path.join(sink, "_spark_metadata")))
+    assert {n for n in sink_log if not n.startswith(".")} == batches
+
+
 def test_merge_stream_materializes_snapshot(spark, tmp_path):
     """CDC-apply: a change stream (upserts + deletes) merged into a
     versioned parquet snapshot via foreachBatch. Checks (a) latest-change-
