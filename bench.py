@@ -588,11 +588,11 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
             )
         )
 
-    ROCKSDB = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
+    import contextlib
+
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.statestore import (
+        rocksdb_state,
     )
-    PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 
     total_events = n * replicas
     out: dict = {"n_events": total_events, "batches_requested": replicas}
@@ -603,15 +603,15 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
         # measured, not asserted. Stateless rule alerts carry no state, so
         # only the stateful lines get a RocksDB twin.
         sustained_lines = [
-            ("stream_rule_alerts_sustained", rule_alerts, None),
-            ("stream_velocity_stateful_sustained", velocity_features_stream, None),
+            ("stream_rule_alerts_sustained", rule_alerts, False),
+            ("stream_velocity_stateful_sustained", velocity_features_stream, False),
             (
                 "stream_velocity_stateful_sustained_rocksdb",
                 velocity_features_stream,
-                ROCKSDB,
+                True,
             ),
-            ("stream_windowed_agg_sustained", windowed_agg, None),
-            ("stream_windowed_agg_sustained_rocksdb", windowed_agg, ROCKSDB),
+            ("stream_windowed_agg_sustained", windowed_agg, False),
+            ("stream_windowed_agg_sustained_rocksdb", windowed_agg, True),
         ]
         # transformWithStateInPandas sustained line (r13 unlock): the SAME
         # per-user profile semantics as the applyInPandasWithState velocity
@@ -628,20 +628,18 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
             if _protobuf_available():
                 tws_transform = account_type_profile_stream
                 sustained_lines.append(
-                    ("stream_tws_profile_sustained", tws_transform, ROCKSDB)
+                    ("stream_tws_profile_sustained", tws_transform, True)
                 )
         except Exception:
             pass
-        for name, transform, provider in sustained_lines:
+        for name, transform, rocksdb in sustained_lines:
             if transform is windowed_agg:
                 mode = "complete"
             elif transform is tws_transform:
                 mode = "update"
             else:
                 mode = "append"
-            if provider:
-                spark.conf.set(PROVIDER_CONF, provider)
-            try:
+            with rocksdb_state(spark) if rocksdb else contextlib.nullcontext():
                 t0 = time.perf_counter()
                 tbl, batches = chunked_replay(
                     spark,
@@ -653,15 +651,12 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
                 )
                 rows = tbl.count()
                 wall = time.perf_counter() - t0
-            finally:
-                if provider:
-                    spark.conf.unset(PROVIDER_CONF)
             out[name] = {
                 "wall_sec": round(wall, 3),
                 "batches": batches,
                 "out_rows": rows,
                 "events_per_sec": round(total_events / wall, 1),
-                "state_provider": "rocksdb" if provider else "hdfs-default",
+                "state_provider": "rocksdb" if rocksdb else "hdfs-default",
             }
         out["stream_velocity_stateful_sustained_rocksdb_changelog"] = (
             _changelog_sustained_line(
@@ -676,48 +671,39 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
 def _changelog_sustained_line(
     spark, spool: str, transform, total_events: int, replicas: int
 ) -> dict:
-    """RocksDB + changelog checkpointing (r9 verdict task 5): the same
-    sustained velocity replay with per-batch changelog DELTAS uploaded to
-    the checkpoint instead of full RocksDB snapshot files — the recovery
-    posture at 100 TB state (snapshot upload leaves the commit path;
-    recovery = last snapshot + changelog replay). Reported next to the
-    events/s lines: total checkpoint bytes, the state-store share, the
-    changelog-file share, and the measured RECOVERY time (a restart from
-    the same checkpoint with no new input: state must load before the
-    query can decide it has nothing to do). Parquet sink, not memory —
-    the one sink class that supports restart — so the events/s figure is
-    sink-comparable only to itself; the A/B twin for throughput remains
-    the rocksdb line above."""
+    """Checkpoint footprint and recovery of the sustained velocity replay
+    under RocksDB (r9 verdict task 5): per-batch changelog DELTAS are
+    uploaded to the checkpoint instead of full RocksDB snapshot files —
+    the recovery posture at 100 TB state (snapshot upload leaves the
+    commit path; recovery = last snapshot + changelog replay). Changelog
+    checkpointing is the session default (session.STREAMING_COMMIT_CONFS),
+    so the ``*_sustained_rocksdb`` lines above run under it too and this
+    line is no longer their changelog-off A/B twin. Reported: total
+    checkpoint bytes, the state-store share, the changelog-file share, and
+    the measured RECOVERY time (a restart from the same checkpoint with no
+    new input: state must load before the query can decide it has nothing
+    to do). Parquet sink, not memory — the one sink class that supports
+    restart — so the events/s figure is sink-comparable only to itself."""
     import glob
+    import shutil
     import tempfile
 
-    from pyspark.sql import functions as F  # noqa: F811
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.sources.tables import (
+        normalize_events,
+    )
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.statestore import (
+        rocksdb_state,
+    )
 
-    ROCKSDB = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
-    CHANGELOG_CONF = (
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    )
     ckpt = tempfile.mkdtemp(prefix="ckpt_changelog_")
     sink = tempfile.mkdtemp(prefix="sink_changelog_")
     physical = spark.read.parquet(os.path.join(spool, "chunk_0001.parquet")).schema
 
     def run_once() -> float:
-        raw = (
+        stream = normalize_events(
             spark.readStream.schema(physical)
             .option("maxFilesPerTrigger", "1")
             .parquet(spool)
-        )
-        ts_type = dict(raw.dtypes).get("ts")
-        if ts_type == "bigint":
-            raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-        stream = raw.select(
-            "event_id", "ts", "user_id", "event_type", "value", "props"
         )
         t0 = time.perf_counter()
         q = (
@@ -732,29 +718,24 @@ def _changelog_sustained_line(
         q.awaitTermination()
         return time.perf_counter() - t0
 
-    spark.conf.set(PROVIDER_CONF, ROCKSDB)
-    spark.conf.set(CHANGELOG_CONF, "true")
     try:
-        wall = run_once()
-        ckpt_bytes = state_bytes = 0
-        for root, _, files in os.walk(ckpt):
-            for f in files:
-                sz = os.path.getsize(os.path.join(root, f))
-                ckpt_bytes += sz
-                if f"{os.sep}state{os.sep}" in os.path.join(root, f):
-                    state_bytes += sz
-        changelog_files = glob.glob(f"{ckpt}/state/**/*.changelog", recursive=True)
-        changelog_bytes = sum(os.path.getsize(f) for f in changelog_files)
-        # recovery: restart from the same checkpoint with no new input —
-        # the wall is dominated by state load (snapshot + changelog replay)
-        recovery_wall = run_once()
+        with rocksdb_state(spark):
+            wall = run_once()
+            ckpt_bytes = state_bytes = 0
+            for root, _, files in os.walk(ckpt):
+                for f in files:
+                    sz = os.path.getsize(os.path.join(root, f))
+                    ckpt_bytes += sz
+                    if f"{os.sep}state{os.sep}" in os.path.join(root, f):
+                        state_bytes += sz
+            changelog_files = glob.glob(f"{ckpt}/state/**/*.changelog", recursive=True)
+            changelog_bytes = sum(os.path.getsize(f) for f in changelog_files)
+            # recovery: restart from the same checkpoint with no new input —
+            # the wall is dominated by state load (snapshot + changelog replay)
+            recovery_wall = run_once()
     finally:
-        spark.conf.unset(CHANGELOG_CONF)
-        spark.conf.unset(PROVIDER_CONF)
-        import shutil as _shutil
-
-        _shutil.rmtree(sink, ignore_errors=True)
-        _shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(sink, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
     return {
         "wall_sec": round(wall, 3),
         "batches": replicas,

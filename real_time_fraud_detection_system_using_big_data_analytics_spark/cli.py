@@ -182,8 +182,7 @@ def cmd_tail(args: argparse.Namespace) -> int:
     ingest path production runs, unlike the reference's separate consumer
     client with its own deserializer (a classic source of parse drift
     between the debug tool and the app)."""
-    import tempfile
-    import uuid
+    from .streaming.replay import drain
 
     spark = get_session("cli-tail")
     if args.kafka:
@@ -195,21 +194,11 @@ def cmd_tail(args: argparse.Namespace) -> int:
         from .streaming.sources import events_file_stream
 
         stream = events_file_stream(spark, args.events_dir)
-    name = "tail_" + uuid.uuid4().hex[:8]
-    q = (
-        # streaming LIMIT: the memory sink materializes at most n rows —
-        # without it an availableNow drain of a large topic/dir would pull
-        # EVERY row into driver memory for a 10-row debug tail (ADVICE r8)
-        stream.limit(args.n)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_tail_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.table(name).limit(args.n).collect()
+    # streaming LIMIT: the memory sink materializes at most n rows —
+    # without it an availableNow drain of a large topic/dir would pull
+    # EVERY row into driver memory for a 10-row debug tail (ADVICE r8)
+    tail, _ = drain(stream.limit(args.n))
+    rows = tail.limit(args.n).collect()
     for r in rows:
         print(json.dumps(r.asDict(), default=str))
     return 0

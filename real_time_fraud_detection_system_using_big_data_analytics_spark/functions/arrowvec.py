@@ -18,8 +18,8 @@ contraction impossible, and the JVM fold likewise never contracts (HotSpot
 only fuses via an explicit Math.fma). Per ROW the accumulation order is
 therefore identical to the fold, element for element, so every double —
 and every ranking, tie-break and rounded output derived from it — is
-bit-identical to the expression form. tests/test_dedup_units.py gains an
-A/B test pinning this equivalence on real corpus data.
+bit-identical to the expression form. tests/test_arrowvec.py pins this
+equivalence A/B on real corpus data.
 
 Boundary discipline (guide §4.1/§4.2): callers select ONLY the columns a
 kernel needs before mapInArrow (the node is opaque to column pruning), and
@@ -194,11 +194,14 @@ def assign_top_cells(
 ) -> DataFrame:
     """Arrow twin of clustering.with_top_cells: appends ``probe_cells`` =
     the n nearest centroid ids, nearest first (stable argsort of the
-    distance row = array_sort over (d, cid) structs: ties by cid)."""
+    distance row = array_sort over (d, cid) structs: ties by cid). ``n``
+    larger than the centroid count yields every centroid, like the
+    expression's ``slice``."""
     keep_cols = list(keep) if keep is not None else [f.name for f in df.schema.fields]
     in_cols = list(dict.fromkeys(keep_cols + [vec_col]))
     src = df.select(*in_cols)
     C, cc = _centroid_arrays(centroids)
+    n = min(n, len(centroids))
 
     import pyspark.sql.types as T
 

@@ -378,8 +378,7 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     value match proves the streaming source contract round-trips
     through the Python API: offset planning, range partitioning,
     per-partition vectorized regeneration, commit."""
-    import tempfile
-    import uuid
+    from ..streaming.replay import drain
 
     register_python_stream_datasource(spark)
     stream = spark.readStream.format("synthetic_events_stream").load()
@@ -389,17 +388,7 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_deci"
         ),
     )
-    name = "pysrc_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_pysrc_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete")[0]
 
 
 # --- writer variant (custom DataSourceArrowWriter) ---------------------
@@ -713,20 +702,24 @@ def stream_python_datasource_sink_roundtrip(
     duplicate epoch and no lost task. The ledger file must list every
     committed batch id; tests/test_pysource.py additionally pins the
     replay-idempotence path directly."""
+    import shutil
     import tempfile
 
     register_python_stream_datasource(spark)
     register_python_stream_sink_datasource(spark)
     out = tempfile.mkdtemp(prefix="pystream_sink_")
+    ckpt = tempfile.mkdtemp(prefix="ckpt_pysink_")
     stream = spark.readStream.format("synthetic_events_stream").load()
     q = (
         stream.writeStream.format("synthetic_events_stream_sink")
         .option("path", out)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_pysink_"))
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+    # the published parquet under ``out`` is read lazily; the checkpoint is not
+    shutil.rmtree(ckpt, ignore_errors=True)
     back = spark.read.parquet(out + "/batch-*.parquet")
     return back.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n"),

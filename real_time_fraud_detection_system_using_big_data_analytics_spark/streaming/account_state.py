@@ -39,16 +39,12 @@ form of the same computation.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-from .sources import events_file_stream
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -114,33 +110,4 @@ def account_profile_stream(events: DataFrame) -> DataFrame:
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-def run_account_profile_hermetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replay the events parquet through the processor to completion."""
-    stream = events_file_stream(spark, sf_dir)
-    profiles = account_profile_stream(stream)
-    name = "acct_" + uuid.uuid4().hex[:8]
-    q = (
-        profiles.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_acct_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # update-mode sink may hold one row per key per batch: keep the final
-    # (cumulative) row per user — on a single-batch availableNow replay this
-    # is a no-op, on a chunked replay it is the correct "latest state" read.
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    sink = spark.table(name)
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        sink.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
     )

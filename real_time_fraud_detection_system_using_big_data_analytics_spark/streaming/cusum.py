@@ -17,16 +17,12 @@ event. State store cost at 100 TB: 16 bytes per account.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-from .sources import events_file_stream
 
 REF_CENTS = 10_500  # shared with operators/risk.py (_CUSUM_REF_CENTS)
 H_CENTS = 40_000
@@ -97,22 +93,6 @@ def cusum_stream(events: DataFrame) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def run_cusum_hermetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = events_file_stream(spark, sf_dir)
-    out = cusum_stream(stream)
-    name = "cusum_" + uuid.uuid4().hex[:8]
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 # --- Streaming structuring (smurfing) screen --------------------------------
@@ -207,19 +187,3 @@ def structuring_stream(events: DataFrame) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def run_structuring_hermetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = events_file_stream(spark, sf_dir)
-    out = structuring_stream(stream)
-    name = "struct_" + uuid.uuid4().hex[:8]
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)

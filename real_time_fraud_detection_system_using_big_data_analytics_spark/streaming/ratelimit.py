@@ -27,16 +27,12 @@ bit-exactly. State store cost at 100 TB: 24 bytes per account.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-from .sources import events_file_stream
 
 CAP_MILLI = 3_000          # bucket capacity: 3 tokens
 COST_MILLI = 1_000         # 1 token per event
@@ -113,19 +109,3 @@ def ratelimit_stream(events: DataFrame) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def run_ratelimit_hermetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = events_file_stream(spark, sf_dir)
-    out = ratelimit_stream(stream)
-    name = "rl_" + uuid.uuid4().hex[:8]
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_rl_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)

@@ -20,6 +20,10 @@ Test usage: run a stateful operator through ``chunked_replay`` and assert
 the result equals the batch formulation — if state is dropped or
 double-counted between batches, the comparison fails (a bug class the
 one-batch replay can never catch).
+
+:func:`drain` is the run-to-completion step this harness shares with
+every other hermetic stream in the engine (registry queries, ``cli
+tail``): availableNow into a memory sink, temp checkpoint removed after.
 """
 
 from __future__ import annotations
@@ -31,8 +35,11 @@ import tempfile
 import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..sources.tables import normalize_events
+
 
 def spool_event_chunks(
     spark: SparkSession,
@@ -57,8 +64,6 @@ def spool_event_chunks(
     os.makedirs(spool, exist_ok=True)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     # contiguous event-time ranges via ntile over (ts, event_id)
-    from pyspark.sql import Window
-
     w = Window.orderBy("ts", "event_id")
     chunked = ev.withColumn("_chunk", F.ntile(n_chunks).over(w))
     for i in range(1, n_chunks + 1):
@@ -114,6 +119,51 @@ def spool_event_chunks(
     return spool
 
 
+def drain(
+    stream_df: DataFrame,
+    output_mode: str = "append",
+    checkpoint: str | None = None,
+) -> tuple[DataFrame, int]:
+    """Run ``stream_df`` to completion (trigger availableNow) into a memory
+    sink; returns (result table, batches executed).
+
+    This is the one way the engine's hermetic streams run. The sink gets a
+    unique name. Without ``checkpoint`` the query checkpoints to a temp
+    directory that is removed once the query terminates: the memory sink
+    holds the result, so nothing reads the checkpoint afterwards. A
+    caller-provided checkpoint is left on disk, e.g. for a later
+    ``statestore`` read."""
+    own_ckpt = checkpoint is None
+    if own_ckpt:
+        checkpoint = tempfile.mkdtemp(prefix="ckpt_")
+    name = "drain_" + uuid.uuid4().hex[:12]
+    try:
+        q = (
+            stream_df.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        if own_ckpt:
+            shutil.rmtree(checkpoint, ignore_errors=True)
+    return stream_df.sparkSession.table(name), len(q.recentProgress)
+
+
+def last_row_per_user(sink: DataFrame, by: str = "n_events") -> DataFrame:
+    """The final cumulative row per user of an update-mode sink, which may
+    hold one row per key per batch: the row with the largest ``by``."""
+    w = Window.partitionBy("user_id").orderBy(F.col(by).desc())
+    return (
+        sink.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 def chunked_replay(
     spark: SparkSession,
     sf_dir: str,
@@ -135,34 +185,16 @@ def chunked_replay(
     own_spool = spool is None
     if own_spool:
         spool = spool_event_chunks(spark, sf_dir, n_chunks)
-    # events_file_stream expects <dir>/events.parquet; the spool holds
-    # chunk files directly, so build the reader here with the same dtype
-    # normalization (see sources.events_file_stream).
-    physical = spark.read.parquet(os.path.join(spool, "chunk_0001.parquet")).schema
-    raw = (
-        spark.readStream.schema(physical)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(spool)
-    )
-    ts_type = dict(raw.dtypes).get("ts")
-    if ts_type == "bigint":
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    stream = raw.select("event_id", "ts", "user_id", "event_type", "value", "props")
-
-    out = transform(stream)
-    name = "replay_" + uuid.uuid4().hex[:8]
-    q = (
-        out.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_replay_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    n_batches = len(q.recentProgress)
-    if own_spool:
-        shutil.rmtree(spool, ignore_errors=True)
-    return spark.table(name), n_batches
+    try:
+        # the spool holds chunk files directly (events_file_stream expects
+        # <dir>/events.parquet), so the reader is built here
+        physical = spark.read.parquet(os.path.join(spool, "chunk_0001.parquet")).schema
+        raw = (
+            spark.readStream.schema(physical)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(spool)
+        )
+        return drain(transform(normalize_events(raw)), output_mode)
+    finally:
+        if own_spool:
+            shutil.rmtree(spool, ignore_errors=True)

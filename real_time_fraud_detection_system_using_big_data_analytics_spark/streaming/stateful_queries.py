@@ -1,4 +1,8 @@
-"""Registry entry for the applyInPandasWithState velocity operator."""
+"""Registry entries for the seven keyed-state stream queries: velocity
+(Python state and its JVM join+window twin), account profile (default and
+RocksDB provider), CUSUM drift, GCRA rate limit and structuring alerts.
+Each drains its operator over the events file stream with
+``replay.drain`` and casts the output to the oracle's types."""
 
 from __future__ import annotations
 
@@ -6,8 +10,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import register
-from .cusum import run_cusum_hermetic
-from .velocity import run_velocity_hermetic
+from .account_state import account_profile_stream
+from .cusum import cusum_stream, structuring_stream
+from .ratelimit import ratelimit_stream
+from .replay import drain, last_row_per_user
+from .sources import events_file_stream
+from .statestore import rocksdb_state
+from .velocity import run_velocity_join_hermetic, velocity_features_stream
 
 
 @register(
@@ -39,7 +48,7 @@ def stream_velocity_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two definitions coincide here; the unit test pins the tie behavior
     explicitly.
     """
-    out = run_velocity_hermetic(spark, sf_dir)
+    out, _ = drain(velocity_features_stream(events_file_stream(spark, sf_dir)))
     return out.select(
         "user_id",
         "event_id",
@@ -76,8 +85,6 @@ def stream_velocity_join_windowed(spark: SparkSession, sf_dir: str) -> DataFrame
     and the bench carries both as an A/B of the Python-state toll (r5
     verdict task 2). See velocity.velocity_features_join_stream for
     state bounds."""
-    from .velocity import run_velocity_join_hermetic
-
     out = run_velocity_join_hermetic(spark, sf_dir)
     return out.select(
         "user_id",
@@ -111,10 +118,14 @@ def stream_account_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     protobuf state protocol could never execute in this sandbox; same
     semantics, same state layout, but on the API whose replay is actually
     hash-verified every round. See streaming/account_state.py."""
-    from .account_state import run_account_profile_hermetic
+    return _account_profile(spark, sf_dir)
 
-    out = run_account_profile_hermetic(spark, sf_dir)
-    return out.select(
+
+def _account_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Drain the profile operator and keep each user's final cumulative row
+    (an update-mode sink may hold one row per key per batch)."""
+    sink, _ = drain(account_profile_stream(events_file_stream(spark, sf_dir)), "update")
+    return last_row_per_user(sink).select(
         "user_id",
         F.col("n_events").cast("bigint").alias("n_events"),
         F.col("total_value_cents").cast("bigint").alias("total_value_cents"),
@@ -144,30 +155,8 @@ def stream_account_profile_rocksdb(spark: SparkSession, sf_dir: str) -> DataFram
     for this query and restored after (shared session). Bench carries the
     throughput A/B (BENCH_SELF streaming.sustained, r9); this carries
     correctness."""
-    from .account_state import run_account_profile_hermetic
-
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(conf, rocksdb)
-    try:
-        out = run_account_profile_hermetic(spark, sf_dir)
-        # force the stream to completion under RocksDB before restoring
-        out = out.select(
-            "user_id",
-            F.col("n_events").cast("bigint").alias("n_events"),
-            F.col("total_value_cents").cast("bigint").alias("total_value_cents"),
-            F.col("max_value_cents").cast("bigint").alias("max_value_cents"),
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
-    return out
+    with rocksdb_state(spark):
+        return _account_profile(spark, sf_dir)
 
 
 @register(
@@ -207,7 +196,7 @@ def stream_cusum_drift_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch computation BIT-exactly, not just approximately — the
     stream==batch equivalence claim is itself the value check. See
     streaming/cusum.py."""
-    out = run_cusum_hermetic(spark, sf_dir)
+    out, _ = drain(cusum_stream(events_file_stream(spark, sf_dir)))
     return out.select(
         "event_id",
         "user_id",
@@ -257,9 +246,7 @@ def stream_rate_limit_gcra(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact equality, like the CUSUM twin. See streaming/ratelimit.py
     for the closed-form derivation and the strict-reject variant's
     documented trade."""
-    from .ratelimit import run_ratelimit_hermetic
-
-    out = run_ratelimit_hermetic(spark, sf_dir)
+    out, _ = drain(ratelimit_stream(events_file_stream(spark, sf_dir)))
     return out.select(
         "event_id",
         "user_id",
@@ -298,9 +285,7 @@ def stream_structuring_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     state only ever holds band transactions (<5% of traffic) — the
     filter-before-state discipline that bounds the state store at scale.
     See streaming/cusum.py (module shared with the CUSUM twin)."""
-    from .cusum import run_structuring_hermetic
-
-    out = run_structuring_hermetic(spark, sf_dir)
+    out, _ = drain(structuring_stream(events_file_stream(spark, sf_dir)))
     return out.select(
         "event_id",
         "user_id",

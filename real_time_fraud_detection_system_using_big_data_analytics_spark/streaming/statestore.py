@@ -19,13 +19,36 @@ a NEW checkpoint via a backfill replay, then cut the stream over.
 
 from __future__ import annotations
 
+import contextlib
 import tempfile
-import uuid
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import register
+
+PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+
+
+@contextlib.contextmanager
+def rocksdb_state(spark: SparkSession) -> Iterator[None]:
+    """Pin the RocksDB state store provider for the queries started inside
+    the block, then restore the session's prior provider. The provider conf
+    is read at query start, so a drain run inside the block keeps RocksDB
+    state to completion."""
+    prev = spark.conf.get(PROVIDER_CONF, None)
+    spark.conf.set(PROVIDER_CONF, ROCKSDB_PROVIDER)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(PROVIDER_CONF)
+        else:
+            spark.conf.set(PROVIDER_CONF, prev)
 
 
 @register(
@@ -55,22 +78,17 @@ def stream_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     per key per partition, pruned server-side by the store layout), not
     a log-archaeology exercise. See streaming/account_state.py for the
     operator; reference analog: the per-batch driver loop it replaces
-    had NO way to see its own accumulated state."""
+    had NO way to see its own accumulated state.
+
+    This is the one registered stream that passes its own checkpoint to
+    ``drain``: the returned ``statestore`` read is lazy and needs the
+    checkpoint after this function returns, so it is left on disk."""
     from .account_state import account_profile_stream
+    from .replay import drain
     from .sources import events_file_stream
 
     ckpt = tempfile.mkdtemp(prefix="ckpt_ssread_")
-    stream = events_file_stream(spark, sf_dir)
-    q = (
-        account_profile_stream(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("ssread_" + uuid.uuid4().hex[:8])
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(account_profile_stream(events_file_stream(spark, sf_dir)), "update", ckpt)
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.user_id").alias("user_id"),

@@ -55,6 +55,10 @@ the reason the API matters at 100 TB state.
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+import tempfile
 from typing import TYPE_CHECKING, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,6 +70,8 @@ from pyspark.sql.streaming.stateful_processor import (
 )
 
 from ..plans.registry import register
+from .replay import chunked_replay, last_row_per_user, spool_event_chunks
+from .statestore import rocksdb_state
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
@@ -208,33 +214,12 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     constraint, not a workaround: composite keyed state belongs on
     executor-local RocksDB, the posture stream_account_profile_rocksdb
     already carries for single-variable state."""
-    from .replay import chunked_replay
-
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(conf, rocksdb)
-    try:
+    with rocksdb_state(spark):
         tbl, batches = chunked_replay(
             spark, sf_dir, account_type_profile_stream, n_chunks=4, output_mode="update"
         )
-        assert batches >= 4, f"expected a multi-batch replay, got {batches}"
-    finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        tbl.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    assert batches >= 4, f"expected a multi-batch replay, got {batches}"
+    return last_row_per_user(tbl)
 
 
 # --- ListState: the third typed state variable (r13) -------------------------
@@ -336,33 +321,12 @@ def stream_tws_topk_liststate(spark: SparkSession, sf_dir: str) -> DataFrame:
     families). Scale: state per key is O(K) by construction — the
     bounded-list discipline that keeps ListState from becoming the
     100 TB state-store leak."""
-    from .replay import chunked_replay
-
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(conf, rocksdb)
-    try:
+    with rocksdb_state(spark):
         tbl, batches = chunked_replay(
             spark, sf_dir, top_values_profile_stream, n_chunks=4, output_mode="update"
         )
-        assert batches >= 4, f"expected a multi-batch replay, got {batches}"
-    finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_seen").desc())
-    return (
-        tbl.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    assert batches >= 4, f"expected a multi-batch replay, got {batches}"
+    return last_row_per_user(tbl, by="n_seen")
 
 
 # --- Event-time timers: the TWS lifecycle surface (r13) ----------------------
@@ -569,29 +533,15 @@ def stream_tws_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries. Scale: O(1) state per key (one open session + one timer);
     the sentinel batches are harness plumbing — a production stream
     always has a next batch to advance the watermark."""
-    import shutil as _shutil
-
-    from .replay import chunked_replay, spool_event_chunks
-
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
     spool = spool_event_chunks(spark, sf_dir, n_chunks=4, sentinel_chunks=2)
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(conf, rocksdb)
     try:
-        tbl, batches = chunked_replay(
-            spark, sf_dir, gap_session_stream, output_mode="append", spool=spool
-        )
+        with rocksdb_state(spark):
+            tbl, batches = chunked_replay(
+                spark, sf_dir, gap_session_stream, output_mode="append", spool=spool
+            )
         assert batches >= 6, f"expected >=6 micro-batches, got {batches}"
     finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
-        _shutil.rmtree(spool, ignore_errors=True)
+        shutil.rmtree(spool, ignore_errors=True)
     # Sentinel users (negative ids) are harness clock-movers; dropped on
     # the BATCH result, never inside the streaming transform (a filter
     # there is pushed below withWatermark and freezes the clock — see
@@ -698,26 +648,14 @@ def stream_tws_initial_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     key like any keyed state; after that the operator is the ordinary
     O(1)-state profile. Same protobuf gate and RocksDB pin as the other
     TWS queries."""
-    import glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-
-    from .replay import chunked_replay, spool_event_chunks
-
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
     spool = spool_event_chunks(spark, sf_dir, n_chunks=4)
     stream_spool = tempfile.mkdtemp(prefix="replay_boot_")
     try:
         # history = quartiles 1-2 (chunk files), stream = quartiles 3-4
         # renamed into a fresh spool (chunk order preserved via utime)
         history = spark.read.parquet(
-            _os.path.join(spool, "chunk_0001.parquet"),
-            _os.path.join(spool, "chunk_0002.parquet"),
+            os.path.join(spool, "chunk_0001.parquet"),
+            os.path.join(spool, "chunk_0002.parquet"),
         )
         profile = (
             history.groupBy("user_id")
@@ -729,12 +667,12 @@ def stream_tws_initial_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         for i, src in enumerate(
-            sorted(glob.glob(_os.path.join(spool, "chunk_000[34].parquet"))),
+            sorted(glob.glob(os.path.join(spool, "chunk_000[34].parquet"))),
             start=1,
         ):
-            dest = _os.path.join(stream_spool, f"chunk_{i:04d}.parquet")
-            _shutil.copy(src, dest)
-            _os.utime(dest, (1_600_000_000 + i, 1_600_000_000 + i))
+            dest = os.path.join(stream_spool, f"chunk_{i:04d}.parquet")
+            shutil.copy(src, dest)
+            os.utime(dest, (1_600_000_000 + i, 1_600_000_000 + i))
 
         def transform(stream: DataFrame) -> DataFrame:
             return stream.groupBy("user_id").transformWithStateInPandas(
@@ -745,26 +683,12 @@ def stream_tws_initial_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 initialState=profile.groupBy("user_id"),
             )
 
-        prev = spark.conf.get(conf, None)
-        spark.conf.set(conf, rocksdb)
-        try:
+        with rocksdb_state(spark):
             tbl, batches = chunked_replay(
                 spark, sf_dir, transform, output_mode="update", spool=stream_spool
             )
-            assert batches >= 2, f"expected a multi-batch replay, got {batches}"
-        finally:
-            if prev is None:
-                spark.conf.unset(conf)
-            else:
-                spark.conf.set(conf, prev)
+        assert batches >= 2, f"expected a multi-batch replay, got {batches}"
     finally:
-        _shutil.rmtree(spool, ignore_errors=True)
-        _shutil.rmtree(stream_spool, ignore_errors=True)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        tbl.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+        shutil.rmtree(spool, ignore_errors=True)
+        shutil.rmtree(stream_spool, ignore_errors=True)
+    return last_row_per_user(tbl)

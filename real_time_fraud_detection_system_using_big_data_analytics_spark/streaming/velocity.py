@@ -14,8 +14,6 @@ invocation, and the state store does the rest (RocksDB provider at scale).
 
 from __future__ import annotations
 
-import tempfile
-import uuid
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
@@ -23,8 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-from .sources import events_file_stream
 
 WINDOW_US = 600 * 1_000_000  # 10 minutes in epoch-micros
 
@@ -221,21 +217,3 @@ def run_velocity_join_hermetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shutil.rmtree(spool, ignore_errors=True)
     return result.where(F.col("user_id") >= 0)
-
-
-def run_velocity_hermetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replay the events parquet through the stateful operator to
-    completion (availableNow, memory sink)."""
-    stream = events_file_stream(spark, sf_dir)
-    feats = velocity_features_stream(stream)
-    name = "vel_" + uuid.uuid4().hex[:8]
-    q = (
-        feats.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)

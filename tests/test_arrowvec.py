@@ -82,6 +82,25 @@ def test_top_cells_bitwise_equals_sorted_candidates(spark, vecs, cents):
     assert {int(r["vec_id"]): tuple(pc) for r, pc in zip(rows, drv)} == old
 
 
+def test_top_cells_n_above_centroid_count_returns_every_cell(spark, vecs, cents):
+    """n > K probes every cell, nearest first, as the expression's slice
+    does, instead of failing on the fixed-size list length."""
+    k = len(cents)
+    expr = vecs.withColumn(
+        "pc",
+        F.transform(
+            F.slice(F.array_sort(cl._candidates(cents)), 1, k + 3), lambda s: s["cid"]
+        ),
+    ).select("vec_id", "pc")
+    kern = av.assign_top_cells(vecs, cents, k + 3, vec_col="e", keep=("vec_id",)).select(
+        "vec_id", "probe_cells"
+    )
+    old = {int(r[0]): tuple(r[1]) for r in expr.collect()}
+    new = {int(r[0]): tuple(r[1]) for r in kern.collect()}
+    assert new == old
+    assert {len(pc) for pc in new.values()} == {k}
+
+
 def test_bounded_scorer_bitwise_equals_fold_cosine(spark):
     e = load_tables(spark, SF, names=("embeddings",))["embeddings"]
     corpus = fan_out(e).select("vec_id", "embedding", _norm("embedding").alias("e_norm"))

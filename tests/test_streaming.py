@@ -16,10 +16,11 @@ from real_time_fraud_detection_system_using_big_data_analytics_spark.sources.fil
 )
 from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.sources import (
     EVENTS_SCHEMA,
+    events_file_stream,
     parse_json_stream,
 )
 from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.velocity import (
-    run_velocity_hermetic,
+    velocity_features_stream,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -51,7 +52,11 @@ def test_velocity_stateful_matches_batch_window(spark):
     """applyInPandasWithState velocity == batch RANGE-frame velocity on an
     in-order replay (the oracle relationship used by the registry).
     Integer-cents comparison — exact, no rounding tolerance."""
-    out = run_velocity_hermetic(spark, SF)
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.replay import (
+        drain,
+    )
+
+    out, _ = drain(velocity_features_stream(events_file_stream(spark, SF)))
     got = {
         (r["user_id"], r["event_id"]): (r["n_prior_10m"], r["sum_prior_cents"])
         for r in out.select("user_id", "event_id", "n_prior_10m", "sum_prior_cents").collect()
